@@ -56,7 +56,13 @@ def setup(b: Bench, ctx) -> dict:
         loads.append(t2 - t1)
     # warm-up pass (JIT, Python workers, operator-side caches); its results
     # are the ones checked against the oracle after timing
-    results = {n: specs[n].fn(b.spark, sf).toPandas() for n in QUERIES}
+    results = {}
+    for n in QUERIES:
+        b.attempted += 1
+        try:
+            results[n] = specs[n].fn(b.spark, sf).toPandas()
+        except Exception as e:  # a failed query is counted, not fatal
+            b.check(f"{n}: {type(e).__name__}: {e}")
     b.spark.range(1).write.format("noop").mode("overwrite").save()
     return {
         "specs": specs,

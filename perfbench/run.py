@@ -204,7 +204,7 @@ def main(argv=None) -> int:
     traced = [w for _, tr, w in b.passes if tr]
     n_traced = max(1, len(traced))
     failed = len(b.failures)
-    attempted = b.attempted + len(state.get("results", ()))
+    attempted = b.attempted
     print(f"workload={ctx.workload} seed={ctx.seed} cores={cores} loop=closed clients=1 "
           f"passes={len(untraced)} untraced + {len(traced)} traced, ops={b.attempted}")
     print("pass walls: " + " ".join(f"{w:.3f}{'T' if tr else ''}" for _, tr, w in b.passes))
