@@ -3,6 +3,7 @@ and the end-to-end and Spark-side layer numbers every workload reports."""
 
 from __future__ import annotations
 
+import math
 import os
 import signal
 import statistics
@@ -21,27 +22,45 @@ LAYER_SUM_FLOOR_S = 0.010
 
 # Host speed calibration. The shared host's speed drifts 2-3x over minutes
 # (every operation, the JVM start and DuckDB alike), which no amount of work
-# inside one run averages out. Each run times a fixed single-thread Python
-# kernel at idle points: three during set-up and one after every timed
-# operation. The bounded time metrics are reported in seconds of a
-# reference host on which the kernel takes CALIBRATION_REF_S (a quiet 4-vCPU
-# 2.1 GHz host): raw seconds times CALIBRATION_REF_S over the
-# run's median kernel time. The kernel under-tracks a slowdown of Spark's
-# multi-threaded work, so this narrows the drift, not removes it. Raw
-# seconds are printed and reported by traced runs too.
-CALIBRATION_REF_S = 0.015
+# inside one run averages out. Spark work here mixes parallel compute with
+# hand-offs between threads and processes (driver-to-JVM calls, task
+# launches, wake-ups), and contention slows the two by different factors:
+# on a shared 4-vCPU KVM guest, across a switch from an idle to a contended
+# host, compute kernels (a parallel sort, a Python loop, a random gather)
+# slowed 1.6-1.75x, driver-to-JVM calls about 3x and both workloads about
+# 2x. The calibration kernel therefore times one of each in the session's
+# JVM and takes their geometric mean: over 19 runs of each workload across
+# that switch, pass time over that mean (with the parallel sort) spread 5%
+# between quartiles; over either kernel alone 15-32%, raw 80-100%. The
+# compute part sums CALIBRATION_N seeded random longs in a parallel stream
+# (every core, through the common fork-join pool). Unlike the sort, it
+# allocates almost nothing, so it leaves the JVM heap, and with it
+# peak_rss_mb, alone. The hand-off part makes CALIBRATION_CALLS trivial
+# driver-to-JVM calls. It is plain JDK and py4j code and starts no Spark
+# job: no program change reaches it except a change to the session's JVM
+# options. It runs three times after the session starts, once after set-up
+# and once after every timed operation; the set-up runs are left out of
+# setup_s. The bounded time metrics are reported in seconds of a reference
+# host on which the kernel takes CALIBRATION_REF_S (about its time on the
+# idle guest): raw seconds times CALIBRATION_REF_S over the run's median
+# kernel time. Raw seconds are printed and reported by traced runs too.
+CALIBRATION_REF_S = 0.055
+CALIBRATION_N = 200_000_000
+CALIBRATION_CALLS = 100
 
 
-def calibrate(reps: int = 3) -> float:
-    """Fastest of ``reps`` timings of the fixed kernel, in seconds."""
-    best = float("inf")
-    for _ in range(reps):
-        t = time.perf_counter()
-        acc = 0
-        for i in range(200_000):
-            acc = (acc * 31 + i) & 0xFFFFFFFF
-        best = min(best, time.perf_counter() - t)
-    return best
+def calibrate(spark) -> float:
+    """One run of the calibration kernel: the geometric mean of its compute
+    and its call-latency timings, in seconds."""
+    jvm = spark.sparkContext._jvm
+    t = time.perf_counter()
+    jvm.java.util.SplittableRandom(7).longs(CALIBRATION_N).parallel().sum()
+    compute = time.perf_counter() - t
+    t = time.perf_counter()
+    for _ in range(CALIBRATION_CALLS):
+        jvm.java.lang.System.nanoTime()  # the name lookups are calls too
+    calls = time.perf_counter() - t
+    return math.sqrt(compute * calls)
 
 
 def process_start() -> float:

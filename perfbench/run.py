@@ -143,7 +143,7 @@ def timed_loop(b, ctx, state, run_pass, calibration: list[float]) -> float:
         ts = time.perf_counter()
         for _ in run_pass(b, ctx, state, p, traced):
             wall += time.perf_counter() - ts
-            calibration.append(calibrate())
+            calibration.append(calibrate(b.spark))
             if p >= need and time.perf_counter() - t0 >= ctx.seconds:
                 return first
             ts = time.perf_counter()
@@ -166,8 +166,7 @@ def main(argv=None) -> int:
     ctx = Ctx(args.workload, args.seed, args.seconds, bool(args.trace), work, cores)
     configure_env(work, cores)
 
-    calibration = [calibrate()]
-
+    calibration: list[float] = []
     workload = importlib.import_module(args.workload)
     t_proc = process_start()
     spark = None
@@ -178,16 +177,17 @@ def main(argv=None) -> int:
         spark = get_spark(app_name=f"perfbench-{args.workload}")
         spark.sparkContext.setLogLevel("ERROR")
         session_s = time.perf_counter() - t
-        calibration.append(calibrate())
+        calibration.extend(calibrate(spark) for _ in range(3))
         tracer = Tracer()
         if ctx.trace:
             instrument(tracer, args.workload)
         b = Bench(spark, tracer, ctx.trace, cores)
         state = workload.setup(b, ctx)
-        calibration.append(calibrate())
+        calibration.append(calibrate(spark))
+        setup_calibration_s = sum(calibration)
         first_op = timed_loop(b, ctx, state, workload.run_pass, calibration)
         reps = state["setup_reps"]
-        setup_s = first_op - t_proc - sum(reps) + statistics.median(reps)
+        setup_s = first_op - t_proc - setup_calibration_s - sum(reps) + statistics.median(reps)
         t_verify = time.perf_counter()
         workload.verify(b, state)
         verify_s = time.perf_counter() - t_verify
@@ -210,6 +210,7 @@ def main(argv=None) -> int:
     print("pass walls: " + " ".join(f"{w:.3f}{'T' if tr else ''}" for _, tr, w in b.passes))
     print(f"setup: session={session_s:.2f}s repeated={' '.join(f'{r:.2f}' for r in reps)}s; "
           f"after timing: checks={verify_s:.2f}s stop={stop_s:.2f}s")
+    print("calibration kernel: " + " ".join(f"{c:.4f}" for c in calibration) + " s")
     for o in b.ops:
         print(f"op pass={o.pass_no}{'T' if o.traced else ''} {o.name} {o.wall:.4f}s")
     for name, s in sorted(b.type_medians().items()):
