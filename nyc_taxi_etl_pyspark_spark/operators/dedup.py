@@ -921,6 +921,11 @@ def semantic_dedup(
     )
 
 
+# SimHash blocking bands. When N_BANDS · prefix_bits = 64, a pair within
+# Hamming distance d < N_BANDS has at least one band untouched (pigeonhole).
+N_BANDS = 4
+
+
 def simhash_dedup(
     df: DataFrame,
     id_col: str,
@@ -929,9 +934,11 @@ def simhash_dedup(
     prefix_bits: int = 16,
 ) -> DataFrame:
     """SimHash near-dup candidates: 64-bit token-weighted fingerprint,
-    blocked on 4 rotated ``prefix_bits`` prefixes (two fingerprints within
-    Hamming distance d share at least one of 4 bands untouched when
-    d ≤ 3), Hamming-filtered within blocks via ``bit_count(a XOR b)``.
+    blocked on ``N_BANDS`` rotated ``prefix_bits`` prefixes (two
+    fingerprints within Hamming distance d share at least one band
+    untouched when d < ``N_BANDS`` and the bands cover all 64 bits),
+    Hamming-filtered within blocks via
+    ``bit_count(a XOR b)``.
     """
     # classic simhash: per-bit vote (+1 if the token hash has the bit set,
     # −1 otherwise), fingerprint bit = sign of the vote. Same plan shape
@@ -974,7 +981,7 @@ def simhash_dedup(
     sim = votes.select(F.col(id_col), fingerprint.alias("simhash"))
 
     bands = []
-    for band in range(4):
+    for band in range(N_BANDS):
         shift = band * prefix_bits
         bands.append(
             F.struct(
@@ -1017,15 +1024,15 @@ def simhash_dedup(
     # bands a pair shares is recomputable from the two fingerprints
     # right on the joined row, so `band == first shared band` keeps
     # exactly one copy per pair — the global `.distinct()` (a full
-    # re-shuffle of the multi-million-row pair multiset, up to 4×
+    # re-shuffle of the multi-million-row pair multiset, up to N_BANDS×
     # duplicated across bands) disappears outright (guide §2.4).
     mask = F.lit((1 << prefix_bits) - 1)
 
     def _pfx(col, j):
         return F.shiftrightunsigned(col, j * prefix_bits).bitwiseAND(mask)
 
-    first_shared = F.lit(3)
-    for j in (2, 1, 0):
+    first_shared = F.lit(N_BANDS - 1)
+    for j in reversed(range(N_BANDS - 1)):
         first_shared = F.when(
             _pfx(F.col("__sa"), j) == _pfx(F.col("__sb"), j), F.lit(j)
         ).otherwise(first_shared)

@@ -55,16 +55,26 @@ def pagerank(
     # this, the derivation re-executes ~(3 + iterations) times and the
     # plan tree snowballs (measured on q_textrank_keywords at sf0.01:
     # ~2,400 stages and 15.4 s warm → 34 stages and ~1.4 s).
+    # Edges with a NULL endpoint are dropped, as connected_components
+    # does: a NULL node cannot be ranked.
+    edges = edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
     if weight is None:
         edges = edges.select("src", "dst").localCheckpoint(eager=True)
         deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
         edge_mass = F.col("pr") / F.col("deg")
     else:
-        edges = edges.select(
-            "src", "dst", F.col(weight).cast("double").alias("__w")
-        ).localCheckpoint(eager=True)
+        # A NULL or NaN weight carries no mass, and neither does a node
+        # whose out-weight sums to zero (pr·w/0 would be NaN and spread
+        # through every rank).
+        w = F.col(weight).cast("double")
+        w = F.coalesce(F.nanvl(w, F.lit(0.0)), F.lit(0.0))
+        edges = edges.select("src", "dst", w.alias("__w")).localCheckpoint(
+            eager=True
+        )
         deg = edges.groupBy("src").agg(F.sum("__w").alias("deg"))
-        edge_mass = F.col("pr") * F.col("__w") / F.col("deg")
+        edge_mass = F.when(
+            F.col("deg") > 0, F.col("pr") * F.col("__w") / F.col("deg")
+        ).otherwise(F.lit(0.0))
     # Scale-adaptive algorithm choice (round 15, guide §1.2 — the same
     # move as connected_components' small-graph path): every engine
     # caller runs PageRank on a graph whose node set is BOUNDED BY
@@ -166,8 +176,10 @@ def _pagerank_single_task(
             deg = np.bincount(isrc, minlength=n).astype("float64")
         pr = np.full(n, 1.0 / n)
         base = (1.0 - d) / n
+        # a zero out-weight sends no mass, as the loop's deg > 0 guard
+        div = np.where(deg > 0, deg, np.inf)[isrc]
         for _ in range(iters):
-            contrib = pr[isrc] * (w if weighted else 1.0) / deg[isrc]
+            contrib = pr[isrc] * (w if weighted else 1.0) / div
             mass = np.zeros(n, dtype="float64")
             np.add.at(mass, idst, contrib)
             pr = base + d * mass

@@ -858,6 +858,7 @@ def ivf_assign(
                             for v, ok in zip(pdf[vec_col], valid)
                         ]
                     )
+                valid &= ~_np.isnan(V).any(axis=1)  # NULL element
                 norms = _np.linalg.norm(V, axis=1)
                 sims = (V / _np.maximum(norms, 1e-12)[:, None]) @ Cv.T
                 cid = pd.Series(Iv[sims.argmax(axis=1)]).astype("Int32")
@@ -1215,6 +1216,7 @@ def _pq_encode_arrow(
                         for v, ok in zip(pdf[vec_col], valid)
                     ]
                 )
+            valid &= ~_np.isnan(V).any(axis=1)  # NULL element
             Vn = V / _np.maximum(
                 _np.linalg.norm(V, axis=1, keepdims=True), 1e-12
             )
@@ -1270,19 +1272,20 @@ def pq_encode(
         raise ValueError(f"unknown encode backend {backend!r}")
     d_sub = len(codebooks[0][0])
     # norm computed ONCE per row (not per element inside the divide)
+    norm = F.sqrt(
+        F.aggregate(
+            F.col(vec_col),
+            F.lit(0.0),
+            lambda a, y: a + y.cast("double") * y.cast("double"),
+        )
+    )
     out = vectors.select(
         F.col(id_col),
         F.col(vec_col),
-        F.greatest(
-            F.sqrt(
-                F.aggregate(
-                    F.col(vec_col),
-                    F.lit(0.0),
-                    lambda a, y: a + y.cast("double") * y.cast("double"),
-                )
-            ),
-            F.lit(1e-12),  # zero vectors encode as themselves, not NaN
-        ).alias("__norm"),
+        # zero vectors encode as themselves, not NaN; a NULL element
+        # keeps the norm NULL, so every code is NULL (greatest() would
+        # skip the NULL and scale the other subspaces by 1e12)
+        F.when(norm < 1e-12, F.lit(1e-12)).otherwise(norm).alias("__norm"),
     ).select(
         F.col(id_col),
         F.col(vec_col),
@@ -1918,6 +1921,7 @@ def _ivfpq_encode_arrow(
                         for v, ok in zip(pdf[vec_col], valid)
                     ]
                 )
+            valid &= ~_np.isnan(V).any(axis=1)  # NULL element
             Vn = V / _np.maximum(
                 _np.linalg.norm(V, axis=1, keepdims=True), 1e-12
             )

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from nyc_taxi_etl_pyspark_spark.operators.joins import salted_join
@@ -2173,7 +2174,9 @@ def test_arrow_encoders_degenerate_vectors(spark, sf_dir):
     NULL or ragged (wrong-length) embedding and killed the task,
     where the expr backends propagated NULL. Pin the pre-mask: the
     batch survives, invalid rows yield NULL centroid/codes, and the
-    valid rows still agree with the expr backend exactly."""
+    valid rows still agree with the expr backend exactly. A vector
+    with a NULL element arrives as NaN and must come out NULL, as the
+    expr backends give it, not as centroid/code 0."""
     from pyspark.sql import functions as F
 
     from nyc_taxi_etl_pyspark_spark.operators.similarity import (
@@ -2189,6 +2192,7 @@ def test_arrow_encoders_degenerate_vectors(spark, sf_dir):
         [
             (10**12, None),  # NULL vector
             (10**12 + 1, [1.0] * 63),  # wrong-length (dim-1) vector
+            (10**12 + 2, [None] + [1.0] * 63),  # NULL element
         ],
         "vec_id long, embedding array<double>",
     )
@@ -2211,6 +2215,7 @@ def test_arrow_encoders_degenerate_vectors(spark, sf_dir):
         ).collect()
     }
     assert got[10**12] is None and got[10**12 + 1] is None
+    assert got[10**12 + 2] is None
     expr = {
         r["vec_id"]: r["centroid_id"]
         for r in ivf_assign(
@@ -2238,6 +2243,22 @@ def test_arrow_encoders_degenerate_vectors(spark, sf_dir):
     }
     assert ivf_enc[10**12] == (None, None)
     assert ivf_enc[10**12 + 1] == (None, None)
+
+    # NULL element: arrow agrees with the expr backends
+    null_elem = vecs.where(f"vec_id = {10**12 + 2}")
+    for fn, args in [
+        (ivf_assign, (cent_df,)),
+        (pq_encode, (pq_books,)),
+        (ivfpq_encode, (cents, books)),
+    ]:
+        rows = {
+            b: fn(null_elem, *args, "vec_id", "embedding", backend=b)
+            .drop("vec_id", "embedding")
+            .collect()
+            for b in ("arrow", "expr")
+        }
+        assert rows["arrow"] == rows["expr"], fn.__name__
+        assert all(v is None for v in rows["arrow"][0]), fn.__name__
 
 
 def test_backend_param_validated(spark, sf_dir):
@@ -2420,25 +2441,72 @@ def test_pagerank_single_task_path_matches_loop(spark, sf_dir):
     The rounded (token, deg, pr) output must equal the DataFrame loop
     on both the unweighted and weighted paths — the same
     stable_round(6)+1e-9 discipline that already absorbs Spark↔DuckDB
-    summation drift absorbs the sorted-edge accumulation order here."""
+    summation drift absorbs the sorted-edge accumulation order here.
+    The second graph has NULL endpoints (the single task crashed on
+    them) and zero / NaN / NULL weights (a zero out-weight spread NaN
+    through every rank): both paths drop NULL-endpoint edges and send
+    no mass along a zero-weight edge."""
+    import math
+
     from nyc_taxi_etl_pyspark_spark.operators.graph import pagerank
 
-    edges = spark.createDataFrame(
-        [
-            ("a", "b", 2.0), ("b", "c", 1.0), ("c", "a", 3.0),
-            ("a", "c", 1.0), ("d", "a", 1.0),  # d: source-only
-            ("a", "e", 1.0),                   # e: sink
-            ("a", "b", 1.0),                   # duplicate edge row
-        ],
-        "src string, dst string, w double",
-    )
-    for kw in ({}, {"weight": "w"}):
-        fast = pagerank(edges, iterations=3, **kw)
-        loop = pagerank(
-            edges, iterations=3, single_task_max_edges=0, **kw
+    base = [
+        ("a", "b", 2.0), ("b", "c", 1.0), ("c", "a", 3.0),
+        ("a", "c", 1.0), ("d", "a", 1.0),  # d: source-only
+        ("a", "e", 1.0),                   # e: sink
+        ("a", "b", 1.0),                   # duplicate edge row
+    ]
+    degenerate = base + [
+        (None, "a", 1.0), ("b", None, 1.0), (None, None, 1.0),
+        ("f", "a", 0.0),                   # f: zero out-weight
+        ("g", "b", float("nan")), ("g", "c", None),  # g: NaN / NULL
+    ]
+    for rows in (base, degenerate):
+        edges = spark.createDataFrame(
+            rows, "src string, dst string, w double"
         )
-        r = lambda df: {
-            (x["token"], x["deg"], round(x["pr"] + 1e-9, 6))
-            for x in df.collect()
-        }
-        assert r(fast) == r(loop), kw
+        for kw in ({}, {"weight": "w"}):
+            fast = pagerank(edges, iterations=3, **kw)
+            loop = pagerank(
+                edges, iterations=3, single_task_max_edges=0, **kw
+            )
+            r = lambda df: {
+                (x["token"], x["deg"], round(x["pr"] + 1e-9, 6))
+                for x in df.collect()
+            }
+            got = r(fast)
+            assert got == r(loop), (rows is degenerate, kw)
+            assert all(t is not None and not math.isnan(p) for t, _, p in got)
+
+
+def test_simhash_pair_set_pinned(spark, sf_dir):
+    """simhash_dedup's band construction and its first-shared-band fold
+    both derive from ``N_BANDS``. Pin the emitted pair set on the
+    fixture documents (count + md5 of the sorted pairs) for a full-cover
+    and a half-cover blocking, and check that each pair comes out once,
+    ordered, within the Hamming threshold."""
+    import hashlib
+
+    from nyc_taxi_etl_pyspark_spark.operators.dedup import simhash_dedup
+
+    if not sf_dir.endswith("sf0.001"):
+        pytest.skip("pinned on the sf0.001 fixture")
+    d = load_table(spark, sf_dir, "documents")
+    pinned = {
+        (16, 16): (2264, "9db2e55e23d7b383aef72a8f6862cef4"),
+        (8, 20): (21951, "79c2012d9a1282ce28ab6449a3ffe273"),
+    }
+    for (prefix_bits, t), (n, digest) in pinned.items():
+        rows = sorted(
+            (r["id_a"], r["id_b"], r["hamming"])
+            for r in simhash_dedup(
+                d, "doc_id", "text", hamming_threshold=t,
+                prefix_bits=prefix_bits,
+            ).collect()
+        )
+        assert len({(a, b) for a, b, _ in rows}) == len(rows)
+        assert all(a < b and h <= t for a, b, h in rows)
+        assert (len(rows), hashlib.md5(repr(rows).encode()).hexdigest()) == (
+            n,
+            digest,
+        ), (prefix_bits, t)
